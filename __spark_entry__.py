@@ -590,13 +590,12 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # draw.)
     #
     # --- NEW r15 (r14 verdict item 4): FLOAT <>-dim in the keyed
-    # 1-<> + 2-order correlated NOT IN — drives the round's float
-    # closure end-to-end (order dims stay integral per the staircase
-    # views' dtype contract; the FLOAT dim is the <> one — the callers
-    # embed l_quantity and the probe
-    # via frontier.neq_canon: CAST(CAST(e AS DOUBLE)+0.0 AS STRING),
-    # NaN self-equal / -0.0 normalized, so the U/V class bookkeeping
-    # matches Spark =/<>). DuckDB CANNOT oracle multi-inequality
+    # 1-<> + 2-order correlated NOT IN, the FLOAT dim being the <>
+    # one. Keyed, so it lowers to one null-aware anti join whose
+    # residual compares the doubles with Spark's own <> (NaN
+    # self-equal, -0.0 = 0.0) — the r15 neq_canon embedding of the
+    # per-group U/V views it replaced is no longer needed here (the
+    # keyless folds keep it). DuckDB CANNOT oracle multi-inequality
     # correlated NOT IN (SURVEY ORACLE WARNING), so the oracle is the
     # JOIN-FORM n/nn/m stats expansion (plain join + groupBy, no
     # decorrelation; DuckDB's double <>/= agrees with Spark's on the
@@ -870,9 +869,10 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
         None,
     ),
     # --- NEW r13: <> PAIRED with an order comparison filtering a
-    # correlated NOT IN set, TOP LEVEL — the executor's mixed-pair
-    # branch (compiler/cqc.py:_apply_neq_order_threshold_not_in): each
-    # three-valued fact folds to the argmin/runner-up triple view.
+    # correlated NOT IN set, TOP LEVEL — keyed, so it lowers to one
+    # null-aware anti join (compiler/cqc.py:_keyed_threshold_anti;
+    # the per-group argmin/runner-up triple views it replaced were
+    # measured slower than Catalyst's decorrelation).
     # DuckDB CANNOT oracle the correlated form (two-inequality NOT IN
     # decorrelation returns empty — SURVEY ORACLE WARNING), so the
     # oracle is the JOIN-FORM stats expansion, like not_in_pair_or.
@@ -3462,19 +3462,21 @@ def _sql_query(
 # multi-comparison [NOT] IN / OR'd-EXISTS shapes ride the spark.sql
 # fallback under mode='auto' BY MEASUREMENT (Catalyst decorrelation
 # won those cells at sf0.1 AND 10x). These entries exist to certify
-# the NATIVE statistic machinery (SURVEY R9/R12), so they force
-# mode='cqc' — the same mode the pytest brute-force matrices pin.
-# Keyless entries (not_in_pair_keyless) stay on auto: auto keeps them
-# native (measured 33x faster than Catalyst's nested loop at 10x).
+# the NATIVE plans (SURVEY R9/R12), so they force mode='cqc' — the
+# same mode the pytest brute-force matrices pin: the OR'd-EXISTS and
+# NOT-IN-under-OR statistic flags, and for the plain keyed NOT IN
+# entries (not_in_neq_order, not_in_neq_order2_float) the one
+# null-aware anti join they lower to. Keyless entries
+# (not_in_pair_keyless) stay on auto: auto keeps them native
+# (measured 33x faster than Catalyst's nested loop at 10x).
 _CQC_FORCED = {
     "exists_neq_pair",
     "exists_three_comparisons",
     "skyline_float_triple",
     "not_in_pair_or",
     "not_in_neq_order",
-    # r15: the float <>-dim entry certifies the NATIVE canon-embedded
-    # U/V statistic; not_in_pair_routed_distinct deliberately stays on
-    # auto — it certifies the routed fallback's DISTINCT rewrite.
+    # not_in_pair_routed_distinct deliberately stays on auto — it
+    # certifies the routed fallback's DISTINCT rewrite.
     "not_in_neq_order2_float",
 }
 

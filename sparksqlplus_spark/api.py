@@ -1349,9 +1349,9 @@ class SparkSQLPlus:
                     # + unique-value test. Round 13: a PAIR of order
                     # comparisons composes too — each fact becomes a
                     # 2-D dominance probe against per-group Pareto
-                    # staircases (the OR sibling of
-                    # _apply_pair_threshold_not_in); <> pairs and 3+
-                    # stay on the fallback.
+                    # staircases (the OR sibling of the keyless
+                    # _apply_pair_threshold_not_in_keyless); <> pairs
+                    # and 3+ stay on the fallback.
                     pops = sorted(n[0] for n in noneq)
                     if len(noneq) == 1 and noneq[0][0] in (
                         "<", "<=", ">", ">=", "<>",
@@ -3635,7 +3635,8 @@ class SparkSQLPlus:
     ):
         """Correlated NOT IN under OR whose inner set is filtered by
         TWO order comparisons against the outer row (round 13 — the OR
-        sibling of compiler/cqc.py:_apply_pair_threshold_not_in):
+        sibling of the keyed pair NOT IN, which now plans as one anti
+        join, compiler/cqc.py:_keyed_threshold_anti):
         ``P OR o.x NOT IN (SELECT y FROM t WHERE t.k = o.k AND
         t.c1 OP1 o.d1 AND t.c2 OP2 o.d2)``. One extreme per fact no
         longer decides (the row attaining best c1 need not satisfy the
@@ -3804,7 +3805,8 @@ class SparkSQLPlus:
     ):
         """Correlated NOT IN under OR whose inner set is filtered by
         TWO ``<>`` plus ONE order comparison (round 13 latest — the OR
-        sibling of compiler/cqc.py:_apply_neq2_order_threshold_not_in):
+        sibling of the keyless compiler/cqc.py:
+        _apply_neq_triple_not_in_keyless):
         each three-valued fact carries a keyed_neq2_order_view (the
         prefix diagonal statistics at every region change point)
         probed by expressions.Neq2OrderWitness. Flag order mirrors the
@@ -3921,8 +3923,8 @@ class SparkSQLPlus:
     ):
         """Correlated NOT IN under OR whose inner set is filtered by
         ONE ``<>`` plus TWO order comparisons (round 13 latest — the
-        OR sibling of compiler/cqc.py:
-        _apply_neq_order2_threshold_not_in): each three-valued fact
+        OR sibling of the keyless compiler/cqc.py:
+        _apply_neq_triple_not_in_keyless): each three-valued fact
         carries a keyed_neq_order2_view (annotated region staircase U
         + distinct-a pair staircase V) probed by
         expressions.NeqTripleWitness. Flag order mirrors the skyline
@@ -6360,7 +6362,7 @@ class SparkSQLPlus:
         # keyed multi-comparison NOT IN gate in compiler/cqc.py (and
         # the OR'd-EXISTS flag gates below) route those shapes to the
         # spark.sql fallback under 'auto' BY MEASUREMENT (SCALING.md
-        # r14 A/B); 'cqc'/'naive' force the native statistic plans
+        # r14 A/B); 'cqc'/'naive' force the native plans
         from sparksqlplus_spark.compiler import cqc as _cqc_mod
 
         _cqc_mod.plan_mode = mode

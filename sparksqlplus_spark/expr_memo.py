@@ -50,15 +50,24 @@ def expr_cache(fn):
     """``functools.lru_cache`` for Column-fragment builders, keyed
     additionally on :func:`context_epoch` so a restarted SparkContext
     never serves stale py4j handles. Arguments must be hashable (the
-    builders take strings/ints by design)."""
+    builders take strings/ints by design). The first call under a new
+    epoch clears the entries of the dead ones, so the memo holds one
+    context's fragments and stays bounded across restarts."""
 
     @functools.lru_cache(maxsize=None)
     def cached(_epoch: int, *args, **kwargs):
         return fn(*args, **kwargs)
 
+    live = None  # epoch of the cached entries
+
     @functools.wraps(fn)
     def wrapper(*args, **kwargs):
-        return cached(context_epoch(), *args, **kwargs)
+        nonlocal live
+        epoch = context_epoch()
+        if epoch != live:
+            cached.cache_clear()
+            live = epoch
+        return cached(epoch, *args, **kwargs)
 
     wrapper.cache_clear = cached.cache_clear
     wrapper.cache_info = cached.cache_info

@@ -643,7 +643,9 @@ def build_context(spec: QuerySpec, catalog: Catalog) -> Context:
             # `AND t.c < o.d` filters the group per outer row — the
             # three-valued facts become threshold tests against
             # per-group extremes, SemiFilter.corr_threshold) — wider
-            # shapes raise and ride the spark.sql fallback.
+            # shapes raise and ride the spark.sql fallback. Every
+            # multi-comparison shape admitted below executes as one
+            # null-aware anti join (cqc._keyed_threshold_anti).
             if ex.n_probe != 1 or len(keys) - n_corr_keys > 1:
                 raise UnsupportedSqlError(
                     "row-value NOT IN with a correlated WHERE is not "

@@ -8,9 +8,76 @@ and a shuffle-partition count that AQE coalesces down when input is small.
 
 from __future__ import annotations
 
+import logging
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+_UNIT = {"": 1, "b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+_DEFAULT_HEAP = 16 << 30  # the cluster-scale default; capped per host
+
+
+def _parse_mem(text: str) -> int | None:
+    """Bytes in a JVM memory string ("16g", "3072m"); None if unparsed."""
+    m = re.fullmatch(r"\s*(\d+)\s*([bkmgt]?)b?\s*", text.lower())
+    return int(m.group(1)) * _UNIT[m.group(2)] if m else None
+
+
+def host_memory_limit() -> int | None:
+    """Bytes this process may use: the tighter of the cgroup memory
+    limit (v2 ``memory.max`` or v1 ``memory.limit_in_bytes``; "max" and
+    the v1 no-limit sentinel count as unlimited) and ``MemAvailable``.
+    None when neither can be read."""
+    found = []
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as fh:
+                text = fh.read().strip()
+        except OSError:
+            continue
+        if text.isdigit() and int(text) < 1 << 60:
+            found.append(int(text))
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemAvailable:"):
+                    found.append(int(line.split()[1]) * 1024)
+                    break
+    except (OSError, ValueError, IndexError):
+        pass
+    return min(found) if found else None
+
+
+def driver_memory(requested: str | None, limit: int | None) -> str:
+    """``spark.driver.memory`` for a host with ``limit`` bytes.
+
+    The heap is pre-touched (see get_spark), so it must fit in memory
+    the host can actually commit: at most half of ``limit``, leaving
+    the other half to JVM off-heap, the Python workers and the OS. A
+    ``requested`` size (SPARK_GRAFT_DRIVER_MEM) is kept verbatim when it
+    fits and clamped to that cap, with a warning, when it does not;
+    without a request the heap is 16g capped the same way. An unknown
+    ``limit`` trusts the request (or 16g); an unparsable request is
+    passed through for Spark to reject."""
+    want = _DEFAULT_HEAP if requested is None else _parse_mem(requested)
+    if want is None:
+        return requested
+    if limit is None or want <= limit // 2:
+        return requested or f"{want >> 20}m"
+    cap = max(limit // 2 >> 20, 512)
+    if requested is not None:
+        _log.warning(
+            "SPARK_GRAFT_DRIVER_MEM=%s exceeds half of the %d MB this "
+            "host can commit; using %dm",
+            requested, limit >> 20, cap,
+        )
+    return f"{cap}m"
 
 
 def get_spark(
@@ -30,7 +97,11 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
 
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    # sized to the host (a 16g pre-touched heap cannot be committed on
+    # a 15 GB machine); SPARK_GRAFT_DRIVER_MEM requests a size
+    driver_mem = driver_memory(
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM"), host_memory_limit()
+    )
     # Commit and pre-touch the full heap at JVM start (-Xms = -Xmx +
     # AlwaysPreTouch). Without it the heap grows lazily and G1 touches
     # freshly-committed pages MID-QUERY, a first-touch page-fault storm
@@ -91,6 +162,12 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # quieter driver logs
         .config("spark.ui.enabled", "false")
+        # no per-Column call-site capture: with it on, every F.col and
+        # Column method makes ~5 extra py4j round-trips to record a
+        # Python line that points into engine internals, not user code
+        # (pyspark/errors/utils.py:_with_origin); measured 6-14% of
+        # the cold wall of CQC-planned queries (SCALING.md round 14)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     extra = dict(extra_conf or {})
     if pretouch:

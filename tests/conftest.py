@@ -1,3 +1,5 @@
+import os
+
 import duckdb
 import pytest
 
@@ -13,7 +15,10 @@ TABLES = [
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
+    spark = get_spark(
+        app_name="tests", master=f"local[{cpus}]", shuffle_partitions=8
+    )
     yield spark
 
 

@@ -1972,10 +1972,10 @@ def test_correlated_not_in_with_threshold(engine):
             else:
                 truth.append(pk)
         assert mine == sorted(truth), (mine, truth)
-        # THREE extra correlations now plan natively through the
-        # triple executors (latest r13: the <>+order+order mix rides
-        # _apply_neq_order2_threshold_not_in — even with all three
-        # against the SAME inner column); brute-force matched here,
+        # THREE extra correlations plan natively (keyed: one
+        # null-aware anti join, compiler/cqc.py:_keyed_threshold_anti
+        # — even with all three against the SAME inner column);
+        # brute-force matched here,
         # FOUR comparisons pin the fallback
         q = """SELECT p.pk FROM ct_outer AS p
                WHERE p.x NOT IN (SELECT i.iy FROM ct_inner AS i
@@ -2019,9 +2019,11 @@ def test_correlated_not_in_with_threshold(engine):
 
 def test_correlated_not_in_two_thresholds(engine):
     """Round 12: correlated NOT IN filtered by TWO order comparisons —
-    each three-valued fact is a 2-D dominance query, answered by
-    per-subset Pareto staircases (compiler/cqc.py
-    _apply_pair_threshold_not_in). Randomized NULL-heavy brute force:
+    keyed, it plans as one null-aware anti join (compiler/cqc.py
+    _keyed_threshold_anti); keyless, each three-valued fact is a 2-D
+    dominance query against global Pareto staircases
+    (_apply_pair_threshold_not_in_keyless). Randomized NULL-heavy
+    brute force:
     every op pair, column and constant probes; plus the fallback
     contract for a <> in the pair and for the keyless-group pair."""
     import operator
@@ -5944,9 +5946,11 @@ def test_float_neq_dims(engine):
         engine.catalog.unregister("fn_inner")
         engine.catalog.unregister("fn_outer")
 
-    # non-default-collation string <>-dim pins the NARROWED
-    # _gate_neq_class_dtype raise (the only class-bookkeeping gate
-    # left after the float closure)
+    # non-default-collation string <>-dim: keyless, it pins the
+    # NARROWED _gate_neq_class_dtype raise (the only class-bookkeeping
+    # gate left after the float closure); keyed, the anti join's <>
+    # across two string collations fails Spark's analysis, declined as
+    # UnsupportedSqlError
     from pyspark.sql import functions as F
 
     ci = spark.createDataFrame(
@@ -5966,6 +5970,14 @@ def test_float_neq_dims(engine):
                      SELECT i.iy FROM fn_ci AS i WHERE i.ik = p.k
                        AND i.a <> p.d1 AND i.b < p.d2
                        AND i.c >= p.d3)""",
+                mode="cqc",
+            )
+        with _pytest.raises(UnsupportedSqlError, match="collation"):
+            engine.sql(
+                """SELECT p.pk FROM fn_co AS p
+                   WHERE p.x NOT IN (
+                     SELECT i.iy FROM fn_ci AS i WHERE i.a <> p.d1
+                       AND i.b < p.d2 AND i.c >= p.d3)""",
                 mode="cqc",
             )
     finally:

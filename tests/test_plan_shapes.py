@@ -60,11 +60,13 @@ BOUNDS = {
     # here: broadcasts are the cheap path). Measured 4 at pin time.
     "not_in_quint_keyless": 4,
     # r16: the routed ORDER-BY-non-output x LIMIT entry re-plans
-    # through mode='cqc' (rescue path) — the same three keyed
-    # threshold-fact views as not_in_pair_routed_distinct (~2
-    # exchanges each) + the helper-sort dedup collapse. Measured 7 at
-    # pin time.
-    "not_in_routed_orderlimit": 7,
+    # through mode='cqc' (rescue path): the keyed pair NOT IN is ONE
+    # null-aware anti join (hash keys = the correlation key, the
+    # comparisons + probe in the residual; it broadcasts at sf0.001)
+    # + the helper-sort dedup collapse's exchange. Was 7 with the
+    # per-group staircase views; measured 1 after the anti-join
+    # lowering (sf0.001).
+    "not_in_routed_orderlimit": 1,
     # r13 (r12 verdict item 6): the GHD/WCOJ hypercube plan. Counting
     # caveat: the persisted graph sources sit above a cache boundary
     # (shuffle_count already skips below InMemoryRelation), so this
@@ -88,17 +90,18 @@ BOUNDS = {
     # retirements took their rows with them — the swapped-in entries
     # are pinned below).
     "exists_neq_pair": 7,
-    # not_in_neq_order = three argmin/runner-up triple views (all /
-    # NULL-y / match), each a (part, a) pre-reduction + top-2 window
-    # sharing the part key, + the one-row-per-part LEFT joins
-    "not_in_neq_order": 7,
+    # not_in_neq_order (keyed <> + order NOT IN under mode='cqc') =
+    # ONE null-aware anti join + the final dedup's exchange. Was 7
+    # with three per-group argmin/runner-up triple views; measured 1
+    # after the anti-join lowering (sf0.001).
+    "not_in_neq_order": 1,
     "not_in_pair_or": 6,
-    # r15: keyed 1-<> + 2-order NOT IN with a FLOAT <>-dim — three
-    # keyed U/V views (all / NULL-y / match), each an applyInPandas
-    # part exchange + a part-keyed collect; the neq_canon embedding is
-    # a pure projection (no extra exchange — that is exactly what this
-    # bound guards). Measured 7 at pin time (sf0.001).
-    "not_in_neq_order2_float": 7,
+    # r15: keyed 1-<> + 2-order NOT IN with a FLOAT <>-dim under
+    # mode='cqc' — ONE null-aware anti join (Spark's own <> on
+    # doubles, no canonicalizing projection) + the final dedup's
+    # exchange. Was 7 with three per-group U/V views; measured 1
+    # after the anti-join lowering (sf0.001).
+    "not_in_neq_order2_float": 1,
     # r15: the routed-fallback DISTINCT entry runs VERBATIM spark.sql
     # + the rewrite under auto — Catalyst's decorrelated left-anti
     # aggregate + the distinct collapse into ONE live exchange.
@@ -207,6 +210,37 @@ def test_shuffle_bound(spark, name):
     )
 
 
+@pytest.mark.parametrize(
+    "name",
+    # the first two run under mode='cqc' (__spark_entry__._CQC_FORCED);
+    # the QUALIFY entry runs under 'auto', whose routed fallback
+    # re-plans it natively because Spark cannot parse QUALIFY
+    ["not_in_neq_order", "not_in_neq_order2_float", "qualify_routed_topk"],
+)
+def test_keyed_multicmp_not_in_plans_one_anti_join(spark, name):
+    """Keyed multi-comparison correlated NOT IN lowers to ONE
+    null-aware anti join — hash keys on the correlation key, the
+    comparisons and ``eq OR isnull(eq)`` in the residual, the plan
+    Catalyst's RewritePredicateSubquery builds — and to none of the
+    per-group statistic views it replaced (collect_list staircases,
+    applyInPandas sweeps, top-2 windows)."""
+    df = em.queries()[name](spark, SF_DIR)
+    text = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    blocks = text.split("\n\n")
+    anti = [b for b in blocks if "Join type: LeftAnti" in b]
+    assert len(anti) == 1, text
+    assert "isnull(" in anti[0], anti[0]
+    assert "collect_list" not in text, text
+    assert "FlatMapGroupsIn" not in text, text
+    windows = [b for b in blocks if b.split("\n")[0].endswith(" Window")]
+    if name == "qualify_routed_topk":
+        assert len(windows) == 1 and "row_number()" in windows[0], windows
+    else:
+        assert windows == [], windows
+
+
 def test_asof_batch_single_key_shuffle(spark):
     """The batch as-of plan's documented shape: union + ONE key
     exchange + running last (operators/asof.py)."""
@@ -246,3 +280,5 @@ def test_runtime_bloom_filter_fires(spark, engine):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+        # the plan above was cached under the forced-shuffle confs
+        engine.clear_plan_cache()
